@@ -43,8 +43,7 @@ def prepare_environment() -> None:
         sys.path.insert(0, ROOT)
 
 
-# settings the JVM reads when it starts: passed to the gateway launch
-# and repeated for every application
+# settings the JVM reads when it starts
 _LAUNCH_CONF = {
     "spark.driver.memory": "2g",
     # -XX:-UsePerfData keeps the JVM from writing hsperfdata under /tmp.
@@ -57,16 +56,8 @@ _LAUNCH_CONF = {
 }
 
 
-def launch_jvm() -> None:
-    """Start the py4j gateway JVM once per process, before any timed
-    region; the Spark applications of the run are started inside it."""
-    from pyspark import SparkConf, SparkContext
-    SparkContext._ensure_initialized(
-        conf=SparkConf().setAll(list(_LAUNCH_CONF.items())))
-
-
 def start_session(ui: bool = False):
-    """Start (or restart) the Spark application.  The settings follow
+    """Start the run's Spark session (and its JVM).  The settings follow
     the repo's own bench.py, sized to this host: local[nproc], one
     shuffle partition per core, AQE on, UTC, bounded Arrow batches."""
     from pyspark.sql import SparkSession
@@ -90,12 +81,6 @@ def start_session(ui: bool = False):
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-def stop_session(spark) -> None:
-    from hiselspark.operators.chunked import release_chunk_caches
-    release_chunk_caches()
-    spark.stop()
 
 
 def shutdown_jvm() -> None:
@@ -166,15 +151,19 @@ def peak_rss_mb() -> float:
 
 
 def median(xs) -> float:
-    return float(statistics.median(xs))
+    """Median; 0 when there is no value (every operation failed)."""
+    return float(statistics.median(xs)) if xs else 0.0
 
 
 class Ledger:
-    """Counts operations (one pass or one catch-up step) and failures."""
+    """Counts operations (one pass or one catch-up step) and failures.
+    ``fail`` makes every guarded operation raise instead of running, to
+    test the failure path."""
 
-    def __init__(self):
+    def __init__(self, fail: bool = False):
         self.attempted = 0
         self.failed = 0
+        self.fail = fail
 
     def record(self, ok: bool, what: str, detail: str = "") -> bool:
         self.attempted += 1
@@ -187,6 +176,8 @@ class Ledger:
         """Run ``fn``; an exception counts as a failed operation and
         returns None."""
         try:
+            if self.fail:
+                raise RuntimeError("injected failure")
             return fn()
         except Exception as e:  # the benchmark keeps going
             import traceback
@@ -234,3 +225,20 @@ _STEAL0 = _steal_s()
 
 def now() -> float:
     return time.perf_counter()
+
+
+def _process_start() -> float:
+    """This process's start on the ``now()`` clock, from its start time
+    in ``/proc/self/stat`` (clock ticks since boot) and ``/proc/uptime``."""
+    with open("/proc/self/stat") as f:
+        ticks = int(f.read().rsplit(")", 1)[1].split()[19])
+    with open("/proc/uptime") as f:
+        uptime = float(f.read().split()[0])
+    return now() - (uptime - ticks / os.sysconf("SC_CLK_TCK"))
+
+
+_PROC0 = _process_start()
+
+
+def since_process_start() -> float:
+    return now() - _PROC0

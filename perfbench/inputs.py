@@ -10,7 +10,6 @@ seed, size) under ``.work/cache`` and reused by later runs.
 """
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -95,33 +94,6 @@ def stage_pointintime(seed: int, n_images: int, n_labels: int,
         write_parts(images_frame(n_images, seed), f"{d}/images", files)
         write_parts(labels_frame(n_images, n_labels, seed), f"{d}/labels", 1)
     return cached(f"pit_select-s{seed}-n{n_images}-l{n_labels}", build)
-
-
-PLANTED = 3
-
-
-def wide_frame(seed: int, n_rows: int, n_cols: int) -> tuple:
-    """``n_cols`` standard-normal columns; ``y`` depends nonlinearly on
-    three of them, chosen by the seed."""
-    rng = np.random.default_rng(seed)
-    x = rng.standard_normal((n_rows, n_cols))
-    planted = sorted(rng.choice(n_cols, PLANTED, replace=False).tolist())
-    a, b, c = (x[:, j] for j in planted)
-    y = (np.sin(2.0 * a) + b * b - np.abs(c)
-         + 0.05 * rng.standard_normal(n_rows))
-    cols = {f"x{j:02d}": x[:, j] for j in range(n_cols)}
-    return pd.DataFrame({**cols, "y": y}), [f"x{j:02d}" for j in planted]
-
-
-def stage_wide(seed: int, n_rows: int, n_cols: int, files: int) -> tuple:
-    def build(d):
-        df, planted = wide_frame(seed, n_rows, n_cols)
-        write_parts(df, f"{d}/table", files)
-        with open(f"{d}/planted.json", "w") as f:
-            json.dump(planted, f)
-    d = cached(f"select_wide-s{seed}-n{n_rows}-d{n_cols}", build)
-    with open(f"{d}/planted.json") as f:
-        return f"{d}/table", json.load(f)
 
 
 def restore(pristine: str, live: str) -> None:

@@ -30,6 +30,8 @@ def main(argv=None) -> int:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--smoke", action="store_true",
                     help="tiny inputs: exercises every code path quickly")
+    ap.add_argument("--fail", action="store_true",
+                    help="testing: every operation raises")
     args = ap.parse_args(argv)
     if not os.path.isdir(os.path.join(harness.ROOT, "hiselspark")):
         print("perfbench: no hiselspark package next to perfbench/",
@@ -44,7 +46,7 @@ def main(argv=None) -> int:
               f"choose from {sorted(table)}", file=sys.stderr)
         return 2
     run = workloads.Run(args.seed, args.seconds,
-                        "smoke" if args.smoke else "full")
+                        "smoke" if args.smoke else "full", args.fail)
     try:
         table[args.workload](run)
     finally:

@@ -1,6 +1,7 @@
 """The benchmark's own test: every workload in both modes at smoke
-sizes, checking the output contract, plus the refusal to run without
-the program.  Takes about five minutes on 4 cores::
+sizes, checking the output contract, the report of a run whose every
+operation fails, and the refusal to run without the program.  Takes
+about four minutes on 4 cores::
 
     python3 -m pytest perfbench/test_smoke.py -q
 """
@@ -21,16 +22,15 @@ with open(os.path.join(ROOT, "BENCHMARK.json")) as _f:
 LISTED = [w["name"] for w in SPEC["workloads"]]
 
 
-def _run(cwd, workload, trace):
+def _run(cwd, workload, trace, *extra):
     return subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", "1", "--seconds", "1", "--trace", str(trace), "--smoke"],
-        cwd=cwd, capture_output=True, text=True, timeout=400)
+         "--seed", "1", "--seconds", "1", "--trace", str(trace), "--smoke",
+         *extra], cwd=cwd, capture_output=True, text=True, timeout=400)
 
 
 @pytest.mark.parametrize("workload,trace",
-                         [(w, t) for w in LISTED for t in (0, 1)]
-                         + [("select_wide", 0)])
+                         [(w, t) for w in LISTED for t in (0, 1)])
 def test_smoke(workload, trace):
     out = _run(ROOT, workload, trace)
     assert out.returncode == 0, out.stderr[-3000:]
@@ -49,6 +49,16 @@ def test_smoke(workload, trace):
             for s in spans)
     else:
         assert all(v["value"] > 0 for v in res["metrics"].values())
+
+
+@pytest.mark.parametrize("workload", LISTED)
+def test_every_operation_failing_is_reported(workload):
+    out = _run(ROOT, workload, 0, "--fail")
+    assert out.returncode == 0, out.stderr[-3000:]
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    assert res["correct"] is False
+    assert res["attempted"] >= 1 and res["failed"] == res["attempted"]
+    assert set(res["metrics"]) == {m["name"] for m in SPEC["end_to_end"]}
 
 
 def test_refuses_without_program():

@@ -195,7 +195,7 @@ def _emit(run, tracer: Tracer, values: dict, stage_sum: float,
     metrics = {k: (float(values.get(k, 0)), u) for k, u in per_layer_metrics()}
     tracer.table(stage_sum, pass_wall)
     H.log(f"spans written to {tracer.write(run.seed, values)}")
-    H.stop_session(run.spark)
+    run.spark.stop()
     H.emit(run.ledger, metrics)
 
 
@@ -271,7 +271,6 @@ def traced_pit_select(run) -> None:
     corpus = inputs.stage_pointintime(run.seed, p["n_images"],
                                       p["n_labels"], p["files"])
     images = f"{corpus}/images"
-    H.launch_jvm()
     spark = run.spark = H.start_session(ui=True)
     labels = W._labels(spark, f"{corpus}/labels")
 
@@ -372,13 +371,12 @@ def traced_catchup_ingest(run) -> None:
                                         processed_source_version)
     from hiselspark.pipeline import featurize_images
 
-    H.launch_jvm()
     state = W.Catchup(run)
     src, drv = state.src, state.drv
     spark = run.spark = H.start_session(ui=True)
     state.step(spark)                       # cold
     walls = [w for w in (state.step(spark) for _ in range(2)) if w]
-    pass_wall = H.median([w for _, w in walls]) if walls else 0.0
+    pass_wall = H.median([w for _, w in walls])
 
     tr = Tracer(spark, "catchup_ingest")
     v: dict = {}

@@ -1,106 +1,114 @@
 """The benchmark's workloads and their correctness gates.
 
-Every workload is a closed loop with one client: the next pass (or
-catch-up step) starts only after the previous one returned.  A run is
+Every workload is a closed loop with one client in one Spark session:
+the next pass (or catch-up step) starts only after the previous one
+returned.  A run is
 
-1. staging (untimed, cached per seed) and the JVM launch;
-2. operations, one after the other, each in a Spark application of
-   its own (a batch job, as a scheduler launches ``jobs/run_*.py``,
-   but into one warm JVM).  A set-up is starting an application and
-   running its operation; ``setup_s`` is the median of the first
-   ``SETUPS``;
-3. every operation after the first ``WARMUP`` is timed from its own
-   start; applications keep starting until ``seconds`` have passed
-   since the last warm-up ended, and at least ``SETUPS`` set-ups and
-   ``MIN_TIMED`` timed operations were made.  Throughput and latency
-   are medians over the timed operations;
-4. the end-of-run checks and ``peak_rss_mb``.
+1. staging: the seeded inputs, cached per seed, untimed;
+2. the cold operation: Spark session start and the first operation.
+   ``setup_s`` is the wall from process start to its end, less the
+   staging time;
+3. warm-up: more operations in the same session, untimed, for
+   ``WARMUP_S`` seconds and at least one operation;
+4. timed operations until ``seconds`` have passed since the warm-up
+   ended and at least ``MIN_TIMED`` were made.  Throughput and latency
+   are medians over the successful timed operations;
+5. the end-of-run checks and ``peak_rss_mb``.
 
 Sizes are in ``SIZES``; ``--smoke`` selects the tiny ones.
 """
 from __future__ import annotations
 
+import glob
 import os
 
 import harness as H
 import inputs
 
-SETUPS = 3
-# operations left untimed while the JIT still compiles the workload's
-# hot paths: a pit_select pass is ~20% slower in the second application
-# of a run than in the fourth
-WARMUP = 2
-MIN_TIMED = 2
+# the JIT is still compiling the hot paths after the cold operation:
+# the second pit_select pass of a session is ~15% slower than the
+# third, and the first four catch-up steps after the cold one ~20%
+# slower than the later ones.  A second untimed pit_select pass cost
+# 10 s a run and did not narrow the spread over seeds.
+WARMUP_S = 8.0
+MIN_TIMED = 3
 BUCKET_S = 7 * 86400.0
 
 SIZES = {
     "full": {
         "pit_select": dict(n_images=4000, n_labels=4000, files=8,
                            b=200, k=4, oracle_entities=4),
-        "select_wide": dict(n_rows=16000, n_cols=48, files=8, b=400, k=3),
-        "catchup_ingest": dict(history=160, history_rows=25, appends=6,
-                               append_rows=1000),
+        "catchup_ingest": dict(history=160, history_rows=25, appends=3,
+                               append_rows=2000, append_files=4),
     },
     "smoke": {
         "pit_select": dict(n_images=1600, n_labels=1600, files=4,
                            b=100, k=4, oracle_entities=3),
-        "select_wide": dict(n_rows=1600, n_cols=12, files=4, b=100, k=3),
         "catchup_ingest": dict(history=6, history_rows=10, appends=3,
-                               append_rows=40),
+                               append_rows=40, append_files=2),
     },
 }
 
 
 class Run:
-    """State of one benchmark invocation: ledger, timings, session."""
+    """State of one benchmark invocation: ledger, staging time, session."""
 
-    def __init__(self, seed: int, seconds: float, size: str):
+    def __init__(self, seed: int, seconds: float, size: str,
+                 fail: bool = False):
         self.seed = seed
         self.seconds = seconds
         self.size = size
-        self.ledger = H.Ledger()
-        self.setups: list = []
+        self.ledger = H.Ledger(fail)
+        self.staging_s = 0.0
         self.spark = None
 
     def params(self, workload: str) -> dict:
         return SIZES[self.size][workload]
 
-    def operate(self, op) -> list:
-        """Phases 2 and 3 of the module docstring.  ``op(spark)``
-        performs one operation and returns the value to collect, or
-        None when it failed."""
-        timed: list = []
-        n = 0
-        t_timed = None
-        while (len(self.setups) < SETUPS or len(timed) < MIN_TIMED
-               or t_timed is None or H.now() - t_timed < self.seconds):
-            if self.spark is not None:
-                H.stop_session(self.spark)
-            t0 = H.now()
-            self.spark = H.start_session()
+    def stage(self, build):
+        """Run ``build()`` (input staging) and keep its wall out of
+        ``setup_s``."""
+        t0 = H.now()
+        out = build()
+        self.staging_s += H.now() - t0
+        return out
+
+    def operate(self, op) -> tuple:
+        """Phases 2 to 4 of the module docstring.  ``op(spark)`` performs
+        one operation and returns (rows, seconds), or None when it
+        failed.  Returns (setup_s, timed values)."""
+        self.spark = H.start_session()
+        op(self.spark)
+        setup = H.since_process_start() - self.staging_s
+        H.log(f"cold operation done: setup {setup:.2f} s")
+        n, t_warm, v = 0, H.now(), None
+        # a failed operation ends the warm-up
+        while n < 1 or (v is not None and H.now() - t_warm < WARMUP_S):
             v = op(self.spark)
             n += 1
-            if len(self.setups) < SETUPS:
-                self.setups.append(H.now() - t0)
-            H.log(f"application {n}: {H.now() - t0:.2f} s -> {v}")
-            if n == WARMUP:
-                t_timed = H.now()
-            elif n > WARMUP and v is not None:
+            H.log(f"warm-up {n}: {v}")
+        timed: list = []
+        n, t_timed = 0, H.now()
+        # with every operation failing, stop after MIN_TIMED
+        while n < MIN_TIMED or (timed and H.now() - t_timed < self.seconds):
+            v = op(self.spark)
+            n += 1
+            H.log(f"timed {n}: {v}")
+            if v is not None:
                 timed.append(v)
-            elif n > WARMUP and H.now() - t_timed > 3 * self.seconds + 60:
-                break  # every operation failing: stop rather than spin
-        return timed
+        return setup, timed
 
-    def finish(self, ops: list) -> None:
-        """Print the end-to-end metrics from the timed operations'
-        (rows, seconds) and the set-ups, then stop the application."""
+    def finish(self, setup: float, ops: list) -> None:
+        """Print the end-to-end metrics from the set-up and the timed
+        operations' (rows, seconds), then stop the session.  With no
+        successful timed operation the medians read 0."""
         metrics = {
             "rows_per_s": (H.median([r / s for r, s in ops]), "rows/s"),
             "step_s": (H.median([s for _, s in ops]), "s"),
-            "setup_s": (H.median(self.setups), "s"),
+            "setup_s": (setup, "s"),
             "peak_rss_mb": (H.peak_rss_mb(), "MB"),
         }
-        H.stop_session(self.spark)
+        self.spark.stop()
         H.emit(self.ledger, metrics)
 
 
@@ -136,9 +144,8 @@ def selection_ok(features) -> bool:
 
 def run_pit_select(run: Run) -> None:
     p = run.params("pit_select")
-    corpus = inputs.stage_pointintime(run.seed, p["n_images"],
-                                      p["n_labels"], p["files"])
-    H.launch_jvm()
+    corpus = run.stage(lambda: inputs.stage_pointintime(
+        run.seed, p["n_images"], p["n_labels"], p["files"]))
     rows_seen: list = []
 
     def one(spark):
@@ -158,7 +165,7 @@ def run_pit_select(run: Run) -> None:
             return None
         return res.n_rows_used, wall
 
-    run.finish(run.operate(one))
+    run.finish(*run.operate(one))
 
 
 def _naive_utc(col):
@@ -224,34 +231,6 @@ def pit_oracle(frame, timeline, labels, fcols, seed: int,
 
 
 # ---------------------------------------------------------------------------
-# select_wide: selection over an existing wide table (not in BENCHMARK.json)
-# ---------------------------------------------------------------------------
-
-def run_select_wide(run: Run) -> None:
-    p = run.params("select_wide")
-    table, planted = inputs.stage_wide(run.seed, p["n_rows"], p["n_cols"],
-                                       p["files"])
-    H.launch_jvm()
-
-    def one(spark):
-        from hiselspark.selection import SparkHSICSelector
-        t0 = H.now()
-        df = spark.read.parquet(table)
-        cols = [c for c in df.columns if c != "y"]
-        res = run.ledger.guard("select_wide pass", lambda: SparkHSICSelector(
-            df, cols, ["y"]).run(number_of_features=p["k"],
-                                 minibatch_size=p["b"], mode="scale"))
-        wall = H.now() - t0
-        if res is None or not run.ledger.record(
-                sorted(res.features) == planted, "select_wide pass",
-                f"features={res.features} planted={planted}"):
-            return None
-        return res.n_rows_used, wall
-
-    run.finish(run.operate(one))
-
-
-# ---------------------------------------------------------------------------
 # catchup_ingest: the write path
 # ---------------------------------------------------------------------------
 
@@ -273,8 +252,8 @@ def stage_catchup(run: Run, p: dict, live: str) -> str:
                                  run.seed, n_entities=max(hist // 50, 1))
         for i in range(p["appends"]):
             lo = hist + i * p["append_rows"]
-            inputs.write_parquet(df.iloc[lo:lo + p["append_rows"]],
-                                 f"{d}/appends/a{i:03d}.parquet")
+            inputs.write_parts(df.iloc[lo:lo + p["append_rows"]],
+                               f"{d}/appends/a{i:03d}", p["append_files"])
         H.fresh_dir(live)
         src = SnapshotTable(f"{live}/source")
         files, stats = [], {}
@@ -290,7 +269,7 @@ def stage_catchup(run: Run, p: dict, live: str) -> str:
 
     return inputs.cached(
         f"catchup_ingest-s{run.seed}-h{p['history']}x{p['history_rows']}"
-        f"-a{p['appends']}x{p['append_rows']}", build)
+        f"-a{p['appends']}x{p['append_rows']}x{p['append_files']}", build)
 
 
 def _parquet_rows(files) -> int:
@@ -309,8 +288,8 @@ class Catchup:
         self.run = run
         self.p = run.params("catchup_ingest")
         live = os.path.join(H.WORK, "live", "catchup_ingest")
-        self.staged = stage_catchup(run, self.p, live)
-        inputs.restore(f"{self.staged}/tables", live)
+        self.staged = run.stage(lambda: stage_catchup(run, self.p, live))
+        run.stage(lambda: inputs.restore(f"{self.staged}/tables", live))
         self.src = SnapshotTable(f"{live}/source")
         self.drv = SnapshotTable(f"{live}/derived")
         self.source_rows = _parquet_rows(self.src.current().files)
@@ -324,7 +303,7 @@ class Catchup:
         (snapshot, rows)."""
         path = f"{self.staged}/appends/{next(self.batches)}"
         snap = self.src.write(spark.read.parquet(path), mode="append")
-        rows = _parquet_rows([path])
+        rows = _parquet_rows(glob.glob(f"{path}/*.parquet"))
         self.source_rows += rows
         return snap, rows
 
@@ -367,22 +346,21 @@ class Catchup:
                 got[1].committed_at - got[0].committed_at)
 
     def check_totals(self) -> None:
+        drv = self.drv.current()
         self.run.ledger.record(
-            _parquet_rows(self.drv.current().files)
+            drv is not None and _parquet_rows(drv.files)
             == _parquet_rows(self.src.current().files),
             "catchup totals", "derived rows != source rows")
 
 
 def run_catchup_ingest(run: Run) -> None:
-    H.launch_jvm()
     state = Catchup(run)
-    steps = run.operate(state.step)
+    setup, steps = run.operate(state.step)
     state.check_totals()
-    run.finish(steps)
+    run.finish(setup, steps)
 
 
 WORKLOADS = {
     "pit_select": run_pit_select,
     "catchup_ingest": run_catchup_ingest,
-    "select_wide": run_select_wide,
 }
