@@ -43,19 +43,6 @@ def prepare_environment() -> None:
         sys.path.insert(0, ROOT)
 
 
-# settings the JVM reads when it starts
-_LAUNCH_CONF = {
-    "spark.driver.memory": "2g",
-    # -XX:-UsePerfData keeps the JVM from writing hsperfdata under /tmp.
-    # The throughput collector grows the heap in steps that repeat from
-    # run to run: the JVM's VmHWM varied by about 2% over seeds with it
-    # and by 40% with the default G1, whose adaptive sizing dominated
-    # peak_rss_mb.
-    "spark.driver.extraJavaOptions":
-        f"-Djava.io.tmpdir={TMP} -XX:-UsePerfData -XX:+UseParallelGC",
-}
-
-
 def start_session(ui: bool = False):
     """Start the run's Spark session (and its JVM).  The settings follow
     the repo's own bench.py, sized to this host: local[nproc], one
@@ -73,9 +60,16 @@ def start_session(ui: bool = False):
          .config("spark.local.dir", os.path.join(WORK, "spark-local"))
          .config("spark.sql.warehouse.dir", os.path.join(WORK, "warehouse"))
          .config("spark.ui.showConsoleProgress", "false")
-         .config("spark.ui.enabled", "true" if ui else "false"))
-    for k, v in _LAUNCH_CONF.items():
-        b = b.config(k, v)
+         .config("spark.ui.enabled", "true" if ui else "false")
+         .config("spark.driver.memory", "2g")
+         # -XX:-UsePerfData keeps the JVM from writing hsperfdata under
+         # /tmp.  The throughput collector grows the heap in steps that
+         # repeat from run to run: the JVM's VmHWM varied by about 2%
+         # over seeds with it and by 40% with the default G1, whose
+         # adaptive sizing dominated peak_rss_mb.
+         .config("spark.driver.extraJavaOptions",
+                 f"-Djava.io.tmpdir={TMP} -XX:-UsePerfData "
+                 "-XX:+UseParallelGC"))
     if ui:
         b = b.config("spark.ui.port", "4140")
     spark = b.getOrCreate()
