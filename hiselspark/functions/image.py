@@ -17,9 +17,15 @@ Images ride as opaque ``binary`` columns with typed metadata
   through ctypes (:mod:`hiselspark.functions.gdcodec`), exercising
   the PSNR >= 40 dB lossy contract end-to-end.  Where libgd is absent
   the jpeg/webp entries degrade to ``NotImplementedError`` behind the
-  same registry.  The Spark-side plumbing (schema, batching, UDF
-  signatures) is identical for every codec and is what the tests
-  exercise.
+  same registry.
+
+Payload bytes become pixels in ONE place, :func:`_each_image_block`:
+same-shape ``raw`` rows as one ``(m, h, w, 3)`` uint8 block per
+bounded chunk, every other codec decoded per row.  Every pixel
+operator is a ``fill(rows, cube)`` over those blocks, and every
+payload-dropping ``with_*`` operator runs through
+:func:`_map_payload`, so the Spark-side plumbing (schema, batching,
+UDF signatures) is identical for every codec and operator.
 """
 from __future__ import annotations
 
@@ -62,7 +68,7 @@ def phash_hamming_distance(a, b):
 
 
 # ---------------------------------------------------------------------------
-# decoding (codec registry; 'raw' implemented, lossy codecs stubbed)
+# decoding (codec registry: raw, raw6, png, and libgd jpeg/webp)
 # ---------------------------------------------------------------------------
 
 def _decode_raw(buf: bytes, w: int, h: int) -> np.ndarray:
@@ -110,14 +116,6 @@ def _decode_raw6(buf: bytes, w: int, h: int) -> np.ndarray:
         np.uint8).reshape(h, w, 3)
 
 
-def _unavailable(fmt: str) -> Callable[..., np.ndarray]:
-    def _raise(buf, w, h):
-        raise NotImplementedError(
-            f"codec '{fmt}' needs an image library (PIL/libvips) that is "
-            "not available in this environment; extend CODECS to add it")
-    return _raise
-
-
 def _decode_jpeg(buf: bytes, w: int, h: int) -> np.ndarray:
     from .gdcodec import decode_jpeg
     return decode_jpeg(bytes(buf), w, h)
@@ -161,6 +159,58 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
     if mse == 0:
         return float("inf")
     return float(10.0 * np.log10(255.0 ** 2 / mse))
+
+
+# ---------------------------------------------------------------------------
+# payload -> pixel blocks, and the payload-dropping map stage
+# ---------------------------------------------------------------------------
+
+def _each_image_block(pdf: pd.DataFrame,
+                      fill: Callable[[np.ndarray, np.ndarray], None],
+                      bytes_col: str = "bytes") -> None:
+    """Decode every payload of ``pdf`` and call ``fill(rows, cube)`` with
+    the positional row indices and their ``(len(rows), h, w, 3)`` uint8
+    pixels.  ``raw`` rows (channel-interleaved RGB8) of one ``(w, h)``
+    arrive as ONE block per chunk, the chunk bounded so an int32
+    working set over it stays ~16MB; every other codec is decoded per
+    row by :func:`decode_image` and arrives as a one-image cube."""
+    bufs = pdf[bytes_col].to_numpy()
+    ws = pdf["w"].to_numpy()
+    hs = pdf["h"].to_numpy()
+    fmts = pdf["fmt"].to_numpy()
+    raw = fmts == "raw"
+    if raw.any():
+        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
+        for key in np.unique(shape_key[raw]):
+            all_rows = np.nonzero(raw & (shape_key == key))[0]
+            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
+            m_cap = max(int(16e6 // (w * h * 3 * 4)), 8)
+            for s in range(0, len(all_rows), m_cap):
+                rows = all_rows[s:s + m_cap]
+                block = np.frombuffer(
+                    b"".join(bufs[r] for r in rows),
+                    dtype=np.uint8).reshape(len(rows), h, w, 3)
+                fill(rows, block)
+    for r in np.nonzero(~raw)[0]:
+        img = decode_image(bufs[r], int(ws[r]), int(hs[r]), str(fmts[r]))
+        fill(np.array([r]), img[None])
+
+
+def _map_payload(df: DataFrame,
+                 frame: Callable[[pd.DataFrame], pd.DataFrame],
+                 fields: Sequence[T.StructField]) -> DataFrame:
+    """Map-only Arrow-batched ``mapInPandas`` of ``frame`` over ``df``;
+    the output schema is the input minus the ``bytes`` payload (never
+    carry multi-KB blobs through a shuffle you don't have to) plus
+    ``fields``."""
+    out_schema = T.StructType(
+        [f for f in df.schema.fields if f.name != "bytes"] + list(fields))
+
+    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in pdfs:
+            yield frame(pdf)
+
+    return df.mapInPandas(run, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -216,54 +266,56 @@ def _pixel_stats_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     HISTOGRAMS (one fused bincount per chunk), never widened to float64
     — the pixel stage is memory-bandwidth-bound, and the 8x traffic of
     a float tensor was the measured 32-core bottleneck.  Non-raw codecs
-    fall back to per-row decode_image + the same histogram reduction."""
+    take the same histogram reduction one decoded image at a time."""
     stats = np.empty((len(pdf), 9), dtype=np.float64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
-    def hist_of(block: np.ndarray, m: int, npix: int) -> np.ndarray:
-        # block: (m * npix * 3,) uint8, channel-interleaved.  One fused
+    def fill(rows: np.ndarray, cube: np.ndarray) -> None:
+        # cube: (m, h, w, 3) uint8, channel-interleaved.  One fused
         # bincount per channel: values offset into per-row slots; the
         # only temp is a (m, npix) int32 — the payload itself is never
         # widened, so the stage streams ~5 bytes/pixel instead of the
         # 8-byte float tensor + sort the old implementation paid.
-        cube = block.reshape(m, npix, 3)
+        m, h, w, _ = cube.shape
+        npix = h * w
+        px = cube.reshape(m, npix, 3)
         row_off = (np.arange(m, dtype=np.int32) * 256)[:, None]
         hist = np.empty((m, 3, 256), dtype=np.int64)
         for c in range(3):
-            idx = cube[:, :, c].astype(np.int32)
+            idx = px[:, :, c].astype(np.int32)
             idx += row_off
             hist[:, c, :] = np.bincount(
                 idx.ravel(), minlength=m * 256).reshape(m, 256)
-        return hist
+        _fill_from_hist(stats, rows, hist, npix)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            all_rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            npix = w * h
-            # bound the int32 index working set to ~16MB per chunk
-            m_cap = max(int(16e6 // (npix * 3 * 4)), 8)
-            for s in range(0, len(all_rows), m_cap):
-                rows = all_rows[s:s + m_cap]
-                block = np.frombuffer(
-                    b"".join(bufs[r] for r in rows), dtype=np.uint8)
-                _fill_from_hist(stats, rows,
-                                hist_of(block, len(rows), npix), npix)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]), str(fmts[r]))
-        npix = img.shape[0] * img.shape[1]
-        _fill_from_hist(stats, np.array([r]),
-                        hist_of(img.reshape(-1), 1, npix), npix)
-
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"])
     for i, f in enumerate(PIXEL_STAT_FIELDS):
         out[f.name] = stats[:, i]
     return out
+
+
+def _augment_block(block: np.ndarray, ops: Sequence) -> np.ndarray:
+    """Apply an augmentation chain (see :func:`augment_raw`) to an
+    ``(m, h, w, 3)`` block as one NumPy gather per op."""
+    for op in ops:
+        kind = op[0]
+        if kind == "hflip":
+            block = block[:, :, ::-1]
+        elif kind == "vflip":
+            block = block[:, ::-1]
+        elif kind == "rot90":
+            block = np.rot90(block, axes=(1, 2))
+        elif kind == "crop":
+            _, x0, y0, cw, ch = op
+            h, w = block.shape[1:3]
+            if not (0 <= x0 and x0 + cw <= w and 0 <= y0
+                    and y0 + ch <= h):
+                raise ValueError(
+                    f"crop ({x0},{y0},{cw},{ch}) outside {w}x{h}")
+            block = block[:, y0:y0 + ch, x0:x0 + cw]
+        else:
+            raise ValueError(f"unknown augmentation op {op!r}")
+    return np.ascontiguousarray(block)
 
 
 def augment_raw(img: np.ndarray, ops: Sequence) -> np.ndarray:
@@ -271,25 +323,40 @@ def augment_raw(img: np.ndarray, ops: Sequence) -> np.ndarray:
     image: ``("hflip",)``, ``("vflip",)``, ``("rot90",)`` (CCW, NumPy
     convention), ``("crop", x0, y0, cw, ch)``.  Pure index gathers —
     no interpolation, no image library."""
-    for op in ops:
-        kind = op[0]
-        if kind == "hflip":
-            img = img[:, ::-1]
-        elif kind == "vflip":
-            img = img[::-1]
-        elif kind == "rot90":
-            img = np.rot90(img)
-        elif kind == "crop":
-            _, x0, y0, cw, ch = op
-            h, w = img.shape[:2]
-            if not (0 <= x0 and x0 + cw <= w and 0 <= y0
-                    and y0 + ch <= h):
-                raise ValueError(
-                    f"crop ({x0},{y0},{cw},{ch}) outside {w}x{h}")
-            img = img[y0:y0 + ch, x0:x0 + cw]
-        else:
-            raise ValueError(f"unknown augmentation op {op!r}")
-    return np.ascontiguousarray(img)
+    return _augment_block(img[None], ops)[0]
+
+
+def _map_raw_transform(df: DataFrame,
+                       transform: Callable[[np.ndarray], np.ndarray],
+                       bytes_col: str) -> DataFrame:
+    """Arrow-batched ``mapInPandas`` that maps every decoded
+    ``(m, h, w, 3)`` block through ``transform`` and re-emits the
+    payloads as 'raw' with the new ``(w, h)``."""
+    out_schema = T.StructType(
+        [T.StructField(f.name, T.IntegerType()) if f.name in ("w", "h")
+         else f for f in df.schema.fields])
+
+    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in pdfs:
+            out_bufs = [None] * len(pdf)
+            out_w = np.empty(len(pdf), dtype=np.int32)
+            out_h = np.empty(len(pdf), dtype=np.int32)
+
+            def fill(rows, cube):
+                block = transform(cube)
+                out_h[rows], out_w[rows] = block.shape[1], block.shape[2]
+                for i, r in enumerate(rows):
+                    out_bufs[r] = block[i].tobytes()
+
+            _each_image_block(pdf, fill, bytes_col)
+            out = pdf.copy()
+            out[bytes_col] = out_bufs
+            out["w"] = out_w
+            out["h"] = out_h
+            out["fmt"] = "raw"
+            yield out
+
+    return df.mapInPandas(run, out_schema)
 
 
 def augment_images(df: DataFrame, ops: Sequence,
@@ -304,66 +371,8 @@ def augment_images(df: DataFrame, ops: Sequence,
     loader; the PIPELINE's job is the deterministic variants, which
     stay reproducible and oracle-checkable."""
     ops = [tuple(op) for op in ops]
-    fields = []
-    for f in df.schema.fields:
-        if f.name in ("w", "h"):
-            fields.append(T.StructField(f.name, T.IntegerType()))
-        else:
-            fields.append(f)
-    out_schema = T.StructType(fields)
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            bufs = pdf[bytes_col].to_numpy()
-            ws = pdf["w"].to_numpy()
-            hs = pdf["h"].to_numpy()
-            fmts = pdf["fmt"].to_numpy()
-            out_bufs = [None] * len(pdf)
-            out_w = np.empty(len(pdf), dtype=np.int32)
-            out_h = np.empty(len(pdf), dtype=np.int32)
-            raw = fmts == "raw"
-            shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-            for key in np.unique(shape_key[raw]):
-                rows = np.nonzero(raw & (shape_key == key))[0]
-                w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-                block = np.frombuffer(
-                    b"".join(bufs[r] for r in rows),
-                    dtype=np.uint8).reshape(len(rows), h, w, 3)
-                for op in ops:
-                    kind = op[0]
-                    if kind == "hflip":
-                        block = block[:, :, ::-1]
-                    elif kind == "vflip":
-                        block = block[:, ::-1]
-                    elif kind == "rot90":
-                        block = np.rot90(block, axes=(1, 2))
-                    elif kind == "crop":
-                        _, x0, y0, cw, ch = op
-                        bh, bw = block.shape[1:3]
-                        if not (0 <= x0 and x0 + cw <= bw and 0 <= y0
-                                and y0 + ch <= bh):
-                            raise ValueError(
-                                f"crop {op} outside {bw}x{bh}")
-                        block = block[:, y0:y0 + ch, x0:x0 + cw]
-                    else:
-                        raise ValueError(f"unknown op {op!r}")
-                block = np.ascontiguousarray(block)
-                for i, r in enumerate(rows):
-                    out_bufs[r] = block[i].tobytes()
-                    out_h[r], out_w[r] = block.shape[1], block.shape[2]
-            for r in np.nonzero(~raw)[0]:
-                img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                                   str(fmts[r]))
-                img = augment_raw(img, ops)
-                out_bufs[r] = img.tobytes()
-                out_h[r], out_w[r] = img.shape[0], img.shape[1]
-            out = pdf.copy()
-            out[bytes_col] = out_bufs
-            out["w"] = out_w
-            out["h"] = out_h
-            out["fmt"] = "raw"
-            yield out
-    return df.mapInPandas(run, out_schema)
+    return _map_raw_transform(
+        df, lambda block: _augment_block(block, ops), bytes_col)
 
 
 _CHECKSUM_MOD = 2_147_483_647
@@ -397,15 +406,22 @@ def with_byte_checksum(df: DataFrame, bytes_col: str = "bytes",
     return df.withColumn(out_col, _ck(F.col(bytes_col)))
 
 
-def resize_raw(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize of an (h, w, 3) uint8 image — pure NumPy
-    integer gather (pixel-center mapping), no image library."""
-    h, w = img.shape[:2]
+def _resize_block(block: np.ndarray, out_w: int,
+                  out_h: int) -> np.ndarray:
+    """Nearest-neighbor resize of an ``(m, h, w, 3)`` block as ONE
+    integer gather (pixel-center mapping)."""
+    h, w = block.shape[1:3]
     ys = np.minimum(((np.arange(out_h) + 0.5) * h / out_h)
                     .astype(np.int64), h - 1)
     xs = np.minimum(((np.arange(out_w) + 0.5) * w / out_w)
                     .astype(np.int64), w - 1)
-    return img[ys[:, None], xs[None, :]]
+    return block[:, ys[:, None], xs[None, :]]
+
+
+def resize_raw(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
+    """Nearest-neighbor resize of an (h, w, 3) uint8 image — pure NumPy
+    integer gather (pixel-center mapping), no image library."""
+    return _resize_block(img[None], out_w, out_h)[0]
 
 
 def resize_images(df: DataFrame, out_w: int, out_h: int,
@@ -416,47 +432,8 @@ def resize_images(df: DataFrame, out_w: int, out_h: int,
     resampled as ONE (m, h, w, 3) gather (per-row NumPy overhead would
     dominate for thumbnails).  The standard preprocessing step of an
     image training pipeline — uniform shapes downstream."""
-    fields = []
-    for f in df.schema.fields:
-        if f.name in ("w", "h"):
-            fields.append(T.StructField(f.name, T.IntegerType()))
-        else:
-            fields.append(f)
-    out_schema = T.StructType(fields)
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            bufs = pdf[bytes_col].to_numpy()
-            ws = pdf["w"].to_numpy()
-            hs = pdf["h"].to_numpy()
-            fmts = pdf["fmt"].to_numpy()
-            out_bufs = [None] * len(pdf)
-            raw = fmts == "raw"
-            shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-            for key in np.unique(shape_key[raw]):
-                rows = np.nonzero(raw & (shape_key == key))[0]
-                w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-                block = np.frombuffer(
-                    b"".join(bufs[r] for r in rows),
-                    dtype=np.uint8).reshape(len(rows), h, w, 3)
-                ys = np.minimum(((np.arange(out_h) + 0.5) * h / out_h)
-                                .astype(np.int64), h - 1)
-                xs = np.minimum(((np.arange(out_w) + 0.5) * w / out_w)
-                                .astype(np.int64), w - 1)
-                resized = block[:, ys[:, None], xs[None, :]]
-                for i, r in enumerate(rows):
-                    out_bufs[r] = resized[i].tobytes()
-            for r in np.nonzero(~raw)[0]:
-                img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                                   str(fmts[r]))
-                out_bufs[r] = resize_raw(img, out_w, out_h).tobytes()
-            out = pdf.copy()
-            out[bytes_col] = out_bufs
-            out["w"] = np.int32(out_w)
-            out["h"] = np.int32(out_h)
-            out["fmt"] = "raw"
-            yield out
-    return df.mapInPandas(run, out_schema)
+    return _map_raw_transform(
+        df, lambda block: _resize_block(block, out_w, out_h), bytes_col)
 
 
 def with_pixel_stats(df: DataFrame) -> DataFrame:
@@ -464,15 +441,7 @@ def with_pixel_stats(df: DataFrame) -> DataFrame:
     payload column afterwards (never carry multi-KB blobs through a
     shuffle you don't have to).  Arrow-batched ``mapInPandas``; the
     per-image loop is inside the batch, vectorized over pixels."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + PIXEL_STAT_FIELDS)
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _pixel_stats_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(df, _pixel_stats_frame, PIXEL_STAT_FIELDS)
 
 
 def _spatial_frame(pdf: pd.DataFrame, grid: int) -> pd.DataFrame:
@@ -484,10 +453,6 @@ def _spatial_frame(pdf: pd.DataFrame, grid: int) -> pd.DataFrame:
     tiles = [None] * m
     edx = np.empty(m, dtype=np.float64)
     edy = np.empty(m, dtype=np.float64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         _, h, w, _ = cube.shape
@@ -507,20 +472,7 @@ def _spatial_frame(pdf: pd.DataFrame, grid: int) -> pd.DataFrame:
         edx[rows] = sdx / float(h * (w - 1) * 3)
         edy[rows] = sdy / float((h - 1) * w * 3)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
 
     out = pdf.drop(columns=["bytes"])
     out["tile_means"] = tiles
@@ -544,18 +496,12 @@ def with_spatial_features(df: DataFrame, grid: int = 2) -> DataFrame:
     engine-exact); blobs are dropped before anything shuffles.  Images
     not divisible by ``grid`` use the top-left ``grid·⌊dim/grid⌋``
     crop for tiles (edges use the full frame)."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("tile_means", T.ArrayType(T.DoubleType())),
-           T.StructField("edge_dx", T.DoubleType()),
-           T.StructField("edge_dy", T.DoubleType()),
-           T.StructField("edge_energy", T.DoubleType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _spatial_frame(pdf, grid)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, lambda pdf: _spatial_frame(pdf, grid),
+        [T.StructField("tile_means", T.ArrayType(T.DoubleType())),
+         T.StructField("edge_dx", T.DoubleType()),
+         T.StructField("edge_dy", T.DoubleType()),
+         T.StructField("edge_energy", T.DoubleType())])
 
 
 def _conv_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -571,10 +517,6 @@ def _conv_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     amean = np.empty(m, dtype=np.float64)
     rmax = np.empty(m, dtype=np.int64)
     npos = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         _, h, w, _ = cube.shape
@@ -588,20 +530,7 @@ def _conv_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         rmax[rows] = r.max(axis=(1, 2))
         npos[rows] = (r > 0).sum(axis=(1, 2), dtype=np.int64)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"]).copy()
     out["conv_abs_mean"] = amean
     out["conv_max"] = rmax
@@ -619,17 +548,11 @@ def with_conv_features(df: DataFrame) -> DataFrame:
     Arrow-batched ``mapInPandas`` over shape-grouped raw payloads —
     images needing >= 3x3; integer arithmetic end to end (one division
     for the mean), blobs dropped before anything shuffles."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("conv_abs_mean", T.DoubleType()),
-           T.StructField("conv_max", T.LongType()),
-           T.StructField("conv_n_pos", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _conv_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, _conv_frame,
+        [T.StructField("conv_abs_mean", T.DoubleType()),
+         T.StructField("conv_max", T.LongType()),
+         T.StructField("conv_n_pos", T.LongType())])
 
 
 def _equalize_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -650,10 +573,6 @@ def _equalize_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     eq_sum = np.empty(m, dtype=np.int64)
     eq_mean = np.empty(m, dtype=np.float64)
     eq_distinct = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -677,20 +596,7 @@ def _equalize_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         eq_mean[rows] = eq_sum[rows] / float(npix)
         eq_distinct[rows] = [len(np.unique(r)) for r in eq]
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"]).copy()
     out["eq_sum"] = eq_sum
     out["eq_mean"] = eq_mean
@@ -708,17 +614,11 @@ def with_equalized_stats(df: DataFrame) -> DataFrame:
     ``conv_abs_mean``) and exposure (``px_mean``) checks.  Same
     Arrow-batched shape-grouped ``mapInPandas`` discipline as the
     other payload operators."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("eq_sum", T.LongType()),
-           T.StructField("eq_mean", T.DoubleType()),
-           T.StructField("eq_distinct", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _equalize_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, _equalize_frame,
+        [T.StructField("eq_sum", T.LongType()),
+         T.StructField("eq_mean", T.DoubleType()),
+         T.StructField("eq_distinct", T.LongType())])
 
 
 def _dhash_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -731,10 +631,6 @@ def _dhash_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     m = len(pdf)
     lo = np.empty(m, dtype=np.int64)
     hi = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         _, h, w, _ = cube.shape
@@ -751,20 +647,7 @@ def _dhash_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         hi[rows] = (bits[:, 4:, :].reshape(len(rows), 32)
                     * weights).sum(axis=1)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
 
     out = pdf.drop(columns=["bytes"])
     out["dhash_lo"] = lo
@@ -787,16 +670,10 @@ def with_dhash(df: DataFrame) -> DataFrame:
     sampling), so every bit is engine-reproducible — the driver gate
     recomputes the sampled pixels, the gradient signs and the packed
     halves arithmetically in SQL.  Blobs dropped before any shuffle."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("dhash_lo", T.LongType()),
-           T.StructField("dhash_hi", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _dhash_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, _dhash_frame,
+        [T.StructField("dhash_lo", T.LongType()),
+         T.StructField("dhash_hi", T.LongType())])
 
 
 def _otsu_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -819,10 +696,6 @@ def _otsu_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     t_star = np.full(m, -1, dtype=np.int64)
     fg_count = np.zeros(m, dtype=np.int64)
     fg_sum = np.zeros(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -853,20 +726,7 @@ def _otsu_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         fg_sum[rows] = np.where(
             ok, s_tot[:, 0] - s0[np.arange(n), best], 0)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"]).copy()
     out["otsu_t"] = t_star
     out["fg_count"] = fg_count
@@ -882,17 +742,11 @@ def with_otsu_stats(df: DataFrame) -> DataFrame:
     over shape-grouped payloads; exact integer cumulative sums and one
     exact sub-2⁵³ division, so the gate's SQL oracle replays every
     histogram count, every candidate score and the argmax."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("otsu_t", T.LongType()),
-           T.StructField("fg_count", T.LongType()),
-           T.StructField("fg_sum", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _otsu_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, _otsu_frame,
+        [T.StructField("otsu_t", T.LongType()),
+         T.StructField("fg_count", T.LongType()),
+         T.StructField("fg_sum", T.LongType())])
 
 
 def _morph_frame(pdf: pd.DataFrame, thresh: int) -> pd.DataFrame:
@@ -906,10 +760,6 @@ def _morph_frame(pdf: pd.DataFrame, thresh: int) -> pd.DataFrame:
     n_fg = np.zeros(m, dtype=np.int64)
     n_er = np.zeros(m, dtype=np.int64)
     n_di = np.zeros(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         g = cube.sum(axis=3, dtype=np.int64)
@@ -928,20 +778,7 @@ def _morph_frame(pdf: pd.DataFrame, thresh: int) -> pd.DataFrame:
         n_er[rows] = er.sum(axis=(1, 2), dtype=np.int64)
         n_di[rows] = di.sum(axis=(1, 2), dtype=np.int64)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"]).copy()
     out["n_fg"] = n_fg
     out["n_eroded"] = n_er
@@ -958,17 +795,11 @@ def with_morphology_stats(df: DataFrame, thresh: int = 380) -> DataFrame:
     Arrow-batched ``mapInPandas`` over shape-grouped payloads; pure
     boolean/integer arithmetic, so the SQL oracle replays every
     neighborhood min/max inline."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("n_fg", T.LongType()),
-           T.StructField("n_eroded", T.LongType()),
-           T.StructField("n_dilated", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _morph_frame(pdf, thresh)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, lambda pdf: _morph_frame(pdf, thresh),
+        [T.StructField("n_fg", T.LongType()),
+         T.StructField("n_eroded", T.LongType()),
+         T.StructField("n_dilated", T.LongType())])
 
 
 def _blob_frame(pdf: pd.DataFrame, thresh: int) -> pd.DataFrame:
@@ -983,10 +814,6 @@ def _blob_frame(pdf: pd.DataFrame, thresh: int) -> pd.DataFrame:
     m = len(pdf)
     n_blobs = np.zeros(m, dtype=np.int64)
     max_blob = np.zeros(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -1014,20 +841,7 @@ def _blob_frame(pdf: pd.DataFrame, thresh: int) -> pd.DataFrame:
                 n_blobs[rows[i]] = len(counts)
                 max_blob[rows[i]] = counts.max()
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"]).copy()
     out["n_blobs"] = n_blobs
     out["max_blob"] = max_blob
@@ -1041,16 +855,10 @@ def with_blob_stats(df: DataFrame, thresh: int = 380) -> DataFrame:
     batched ``mapInPandas`` over shape-grouped payloads; pure integer
     min-propagation, so a SQL engine replays it with recursive
     min-label CTEs."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("n_blobs", T.LongType()),
-           T.StructField("max_blob", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _blob_frame(pdf, thresh)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, lambda pdf: _blob_frame(pdf, thresh),
+        [T.StructField("n_blobs", T.LongType()),
+         T.StructField("max_blob", T.LongType())])
 
 
 def _octant(gx: np.ndarray, gy: np.ndarray) -> np.ndarray:
@@ -1078,10 +886,6 @@ def _gradhist_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     m = len(pdf)
     hog = np.zeros((m, 8), dtype=np.int64)
     n_flat = np.zeros(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         g = cube.sum(axis=3, dtype=np.int64)
@@ -1097,20 +901,7 @@ def _gradhist_frame(pdf: pd.DataFrame) -> pd.DataFrame:
             hog[rows, b] = (mag * sel).sum(axis=(1, 2),
                                            dtype=np.int64)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"]).copy()
     for b in range(8):
         out[f"hog{b}"] = hog[:, b]
@@ -1126,16 +917,10 @@ def with_gradient_hist(df: DataFrame) -> DataFrame:
     batched ``mapInPandas`` over shape-grouped payloads; exact integer
     arithmetic end to end, so the SQL oracle replays every gradient,
     octant test and magnitude sum inline."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField(f"hog{b}", T.LongType()) for b in range(8)]
+    return _map_payload(
+        df, _gradhist_frame,
+        [T.StructField(f"hog{b}", T.LongType()) for b in range(8)]
         + [T.StructField("n_flat", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _gradhist_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
 
 
 def _moments_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1152,10 +937,6 @@ def _moments_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     m = len(pdf)
     cols = {k: np.zeros(m, dtype=np.int64)
             for k in ("m00", "m10", "m01", "cn20", "cn11", "cn02")}
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -1175,20 +956,7 @@ def _moments_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         cols["cn02"][rows] = m00 * m02 - m01 * m01
         cols["cn11"][rows] = m00 * m11 - m10 * m01
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"]).copy()
     for k, v in cols.items():
         out[k] = v
@@ -1201,16 +969,10 @@ def with_image_moments(df: DataFrame) -> DataFrame:
     spread and orientation features for layout/shape curation.
     Arrow-batched ``mapInPandas``; the SQL oracle recomputes every
     moment arithmetically."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField(k, T.LongType())
-           for k in ("m00", "m10", "m01", "cn20", "cn11", "cn02")])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _moments_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, _moments_frame,
+        [T.StructField(k, T.LongType())
+         for k in ("m00", "m10", "m01", "cn20", "cn11", "cn02")])
 
 
 def _boxmax_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1224,10 +986,6 @@ def _boxmax_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     box_max = np.zeros(m, dtype=np.int64)
     box_y = np.zeros(m, dtype=np.int64)
     box_x = np.zeros(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -1245,20 +1003,7 @@ def _boxmax_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         box_y[rows] = idx // bw + 1
         box_x[rows] = idx % bw + 1
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"]).copy()
     out["box_max"] = box_max
     out["box_y"] = box_y
@@ -1271,17 +1016,11 @@ def with_box_peak(df: DataFrame) -> DataFrame:
     through a summed-area table, with its first-occurrence interior
     position — exact integers; the oracle proves the SAT algebra by
     direct per-box addition."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("box_max", T.LongType()),
-           T.StructField("box_y", T.LongType()),
-           T.StructField("box_x", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _boxmax_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, _boxmax_frame,
+        [T.StructField("box_max", T.LongType()),
+         T.StructField("box_y", T.LongType()),
+         T.StructField("box_x", T.LongType())])
 
 
 # clockwise 8-neighborhood from the top-left corner — the standard
@@ -1309,10 +1048,6 @@ def _lbp_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     lsum = np.empty(m, dtype=np.int64)
     nuni = np.empty(m, dtype=np.int64)
     ndist = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -1335,20 +1070,7 @@ def _lbp_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         ndist[rows] = 1 + (srt[:, 1:] != srt[:, :-1]).sum(
             axis=1, dtype=np.int64)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"]).copy()
     out["lbp_sum"] = lsum
     out["lbp_n_uniform"] = nuni
@@ -1361,17 +1083,11 @@ def with_lbp_stats(df: DataFrame) -> DataFrame:
     the payload.  Arrow-batched ``mapInPandas`` over shape-grouped raw
     payloads; integer arithmetic end to end, blobs dropped before
     anything shuffles."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("lbp_sum", T.LongType()),
-           T.StructField("lbp_n_uniform", T.LongType()),
-           T.StructField("lbp_distinct", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _lbp_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, _lbp_frame,
+        [T.StructField("lbp_sum", T.LongType()),
+         T.StructField("lbp_n_uniform", T.LongType()),
+         T.StructField("lbp_distinct", T.LongType())])
 
 
 def _median3_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1386,10 +1102,6 @@ def _median3_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     msum = np.empty(m, dtype=np.int64)
     mmax = np.empty(m, dtype=np.int64)
     nchg = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -1403,20 +1115,7 @@ def _median3_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         mmax[rows] = med.max(axis=(1, 2))
         nchg[rows] = (med != c).sum(axis=(1, 2), dtype=np.int64)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"]).copy()
     out["med_sum"] = msum
     out["med_max"] = mmax
@@ -1428,17 +1127,11 @@ def with_median3_stats(df: DataFrame) -> DataFrame:
     """Append 3x3-median-filter statistics (see :func:`_median3_frame`)
     and drop the payload — same mapInPandas shape-group plan as the
     other pixel operators."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("med_sum", T.LongType()),
-           T.StructField("med_max", T.LongType()),
-           T.StructField("n_changed", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _median3_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, _median3_frame,
+        [T.StructField("med_sum", T.LongType()),
+         T.StructField("med_max", T.LongType()),
+         T.StructField("n_changed", T.LongType())])
 
 
 def _ssim_sums_frame(pdf: pd.DataFrame, a_col: str, b_col: str,
@@ -1584,18 +1277,12 @@ def with_color_stats(df: DataFrame, bins_per_channel: int = 4) -> DataFrame:
     if 256 % bins_per_channel:
         raise ValueError("bins_per_channel must divide 256, got "
                          f"{bins_per_channel}")
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("n_bins", T.LongType()),
-           T.StructField("dom_bin", T.LongType()),
-           T.StructField("dom_share", T.DoubleType()),
-           T.StructField("color_entropy", T.DoubleType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _color_stats_frame(pdf, bins_per_channel)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, lambda pdf: _color_stats_frame(pdf, bins_per_channel),
+        [T.StructField("n_bins", T.LongType()),
+         T.StructField("dom_bin", T.LongType()),
+         T.StructField("dom_share", T.DoubleType()),
+         T.StructField("color_entropy", T.DoubleType())])
 
 
 def _lap_suffstats_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1608,10 +1295,6 @@ def _lap_suffstats_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     ln = np.empty(m, dtype=np.int64)
     ls = np.empty(m, dtype=np.int64)
     lss = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         _, h, w, _ = cube.shape
@@ -1623,20 +1306,7 @@ def _lap_suffstats_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         ls[rows] = r.sum(axis=(1, 2), dtype=np.int64)
         lss[rows] = (r * r).sum(axis=(1, 2), dtype=np.int64)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"]).copy()
     out["lap_n"] = ln
     out["lap_sum"] = ls
@@ -1673,17 +1343,11 @@ def with_blur_score(df: DataFrame,
     thr = int(var_threshold)
     if thr < 0:
         raise ValueError(f"var_threshold must be >= 0, got {thr}")
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("lap_n", T.LongType()),
-           T.StructField("lap_sum", T.LongType()),
-           T.StructField("lap_sumsq", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _lap_suffstats_frame(pdf)
-
-    out = df.mapInPandas(run, out_schema)
+    out = _map_payload(
+        df, _lap_suffstats_frame,
+        [T.StructField("lap_n", T.LongType()),
+         T.StructField("lap_sum", T.LongType()),
+         T.StructField("lap_sumsq", T.LongType())])
     n = F.col("lap_n")
     num = n * F.col("lap_sumsq") - F.col("lap_sum") * F.col("lap_sum")
     return (out
@@ -1713,10 +1377,6 @@ def _harris_frame(pdf: pd.DataFrame, threshold: int) -> pd.DataFrame:
     ncor = np.empty(m, dtype=np.int64)
     rmax = np.empty(m, dtype=np.int64)
     rarg = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         g = cube.sum(axis=3, dtype=np.int64)
@@ -1743,20 +1403,7 @@ def _harris_frame(pdf: pd.DataFrame, threshold: int) -> pd.DataFrame:
         rmax[rows] = flat.max(axis=1)
         rarg[rows] = flat.argmax(axis=1)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"]).copy()
     out["corner_count"] = ncor
     out["resp_max"] = rmax
@@ -1773,17 +1420,11 @@ def with_harris_corners(df: DataFrame,
     image curation signal.  Arrow-batched ``mapInPandas`` over
     shape-grouped raw payloads; images must be >= 5x5 (Sobel then box
     sum each eat a 1-pixel border)."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("corner_count", T.LongType()),
-           T.StructField("resp_max", T.LongType()),
-           T.StructField("resp_argmax", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _harris_frame(pdf, int(threshold))
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, lambda pdf: _harris_frame(pdf, int(threshold)),
+        [T.StructField("corner_count", T.LongType()),
+         T.StructField("resp_max", T.LongType()),
+         T.StructField("resp_argmax", T.LongType())])
 
 
 def _glcm_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1807,10 +1448,6 @@ def _glcm_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     contrast = np.empty(m, dtype=np.int64)
     energy = np.empty(m, dtype=np.int64)
     hom840 = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -1829,20 +1466,7 @@ def _glcm_frame(pdf: pd.DataFrame) -> pd.DataFrame:
             cnt = np.bincount(codes[j], minlength=64)
             energy[r] = int((cnt.astype(np.int64) ** 2).sum())
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"]).copy()
     out["glcm_pairs"] = npair
     out["glcm_contrast"] = contrast
@@ -1855,18 +1479,12 @@ def with_glcm_stats(df: DataFrame) -> DataFrame:
     """Append GLCM texture statistics (see :func:`_glcm_frame`) and
     drop the payload — Arrow-batched ``mapInPandas`` over
     shape-grouped raw payloads, integer arithmetic end to end."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("glcm_pairs", T.LongType()),
-           T.StructField("glcm_contrast", T.LongType()),
-           T.StructField("glcm_energy_num", T.LongType()),
-           T.StructField("glcm_hom840", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _glcm_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, _glcm_frame,
+        [T.StructField("glcm_pairs", T.LongType()),
+         T.StructField("glcm_contrast", T.LongType()),
+         T.StructField("glcm_energy_num", T.LongType()),
+         T.StructField("glcm_hom840", T.LongType())])
 
 
 def _projection_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1890,10 +1508,6 @@ def _projection_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     cssq = np.empty(m, dtype=np.int64)
     comy = np.empty(m, dtype=np.int64)
     comx = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -1908,20 +1522,7 @@ def _projection_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         comx[rows] = (np.arange(w, dtype=np.int64)[None, :]
                       * c).sum(axis=1, dtype=np.int64)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
+    _each_image_block(pdf, fill)
     out = pdf.drop(columns=["bytes"]).copy()
     out["proj_total"] = total
     out["proj_row_ssq"] = rssq
@@ -1935,19 +1536,13 @@ def with_projection_stats(df: DataFrame) -> DataFrame:
     """Append projection-profile statistics (see
     :func:`_projection_frame`) and drop the payload — Arrow-batched
     ``mapInPandas``, integer arithmetic end to end."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("proj_total", T.LongType()),
-           T.StructField("proj_row_ssq", T.LongType()),
-           T.StructField("proj_col_ssq", T.LongType()),
-           T.StructField("com_y_num", T.LongType()),
-           T.StructField("com_x_num", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _projection_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_payload(
+        df, _projection_frame,
+        [T.StructField("proj_total", T.LongType()),
+         T.StructField("proj_row_ssq", T.LongType()),
+         T.StructField("proj_col_ssq", T.LongType()),
+         T.StructField("com_y_num", T.LongType()),
+         T.StructField("com_x_num", T.LongType())])
 
 
 def with_hist_cells(df: DataFrame, key_col: str = "okey") -> DataFrame:

@@ -1,6 +1,9 @@
 """Multimodal payload operators: image resize, audio features, video
 frame sampling — real math for the uncompressed codecs, registry stubs
 for the library-dependent ones, and NumPy oracles throughout."""
+import functools
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -177,6 +180,97 @@ def test_augment_images_spark_and_checksum(spark):
         augment_images(spark.createDataFrame(pdf), [("hflip",)]))
         .toPandas().set_index("image_id")["byte_checksum"])
     assert (plain != flipped).any()
+
+
+def test_augment_images_rejects_out_of_range_crop(spark):
+    """One crop check for the per-image and the per-block path: Spark
+    fails with augment_raw's error for raw blocks and decoded rows."""
+    from hiselspark.functions.image import augment_images, augment_raw
+    from hiselspark.functions.png import encode_png
+    img = np.zeros((6, 8, 3), dtype=np.uint8)
+    ops = [("crop", 5, 0, 4, 4)]
+    with pytest.raises(ValueError) as err:
+        augment_raw(img, ops)
+    msg = str(err.value)
+    assert msg == "crop (5,0,4,4) outside 8x6"
+    for fmt, buf in (("raw", img.tobytes()), ("png", encode_png(img))):
+        pdf = pd.DataFrame([("i0", buf, 8, 6, fmt)],
+                           columns=["image_id", "bytes", "w", "h", "fmt"])
+        with pytest.raises(Exception, match=re.escape(msg)):
+            augment_images(spark.createDataFrame(pdf), ops).collect()
+
+
+def _fill_frames():
+    import hiselspark.functions.image as im
+    return {
+        "pixel_stats": im._pixel_stats_frame,
+        "spatial": lambda p: im._spatial_frame(p, 2),
+        "conv": im._conv_frame,
+        "equalize": im._equalize_frame,
+        "dhash": im._dhash_frame,
+        "otsu": im._otsu_frame,
+        "morph": lambda p: im._morph_frame(p, 380),
+        "blob": lambda p: im._blob_frame(p, 380),
+        "gradhist": im._gradhist_frame,
+        "moments": im._moments_frame,
+        "boxmax": im._boxmax_frame,
+        "lbp": im._lbp_frame,
+        "median3": im._median3_frame,
+        "lap_suffstats": im._lap_suffstats_frame,
+        "harris": lambda p: im._harris_frame(p, 0),
+        "glcm": im._glcm_frame,
+        "projection": im._projection_frame,
+    }
+
+
+@functools.lru_cache(maxsize=1)
+def _mixed_codec_batch():
+    """Raw 256x256 and 9x7 images interleaved with lossless png copies
+    of some of them.  256x256 raw blocks are chunked at 20 rows, so the
+    22 raw rows of that shape cross a chunk boundary.  Values below 200
+    keep the foreground of the 380 gray-sum threshold sparse, so blob
+    labelling converges in few sweeps."""
+    from hiselspark.functions.png import encode_png
+    rng = np.random.default_rng(11)
+    rows, twin = [], {}
+    for i in range(22):
+        for w, h in ((256, 256), (9, 7)):
+            img = rng.integers(0, 200, size=(h, w, 3), dtype=np.uint8)
+            rows.append((len(rows), img.tobytes(), w, h, "raw"))
+            if i % 4 == 1:
+                # adaptive filters decode row by row; "Up" keeps the
+                # large twins cheap
+                strategy = "adaptive" if w < 64 else "fixed:2"
+                twin[len(rows)] = len(rows) - 1
+                rows.append((len(rows),
+                             encode_png(img, filter_strategy=strategy),
+                             w, h, "png"))
+    pdf = pd.DataFrame(rows, columns=["k", "bytes", "w", "h", "fmt"])
+    return pdf.astype({"w": "int32", "h": "int32"}), twin
+
+
+@pytest.mark.parametrize("name", sorted(_fill_frames()))
+def test_fill_frames_mixed_codecs_cross_chunks(name):
+    """Every frame decoding through the shared payload path keeps row
+    order and non-payload columns, gives a png row the features of its
+    raw twin, and gives each row the features it has when run alone —
+    also for raw rows on both sides of a chunk boundary."""
+    frame = _fill_frames()[name]
+    pdf, twin = _mixed_codec_batch()
+    pdf = pdf.copy()
+    assert ((pdf["w"] == 256) & (pdf["fmt"] == "raw")).sum() > 20
+    out = frame(pdf)
+    keep = ["k", "w", "h", "fmt"]
+    pd.testing.assert_frame_equal(out[keep], pdf[keep])
+    feats = [c for c in out.columns if c not in keep]
+    assert feats and "bytes" not in out.columns
+    for png_row, raw_row in twin.items():
+        pd.testing.assert_frame_equal(
+            out.loc[[png_row], feats].reset_index(drop=True),
+            out.loc[[raw_row], feats].reset_index(drop=True))
+    for i in range(len(pdf)):
+        pd.testing.assert_frame_equal(out.iloc[[i]],
+                                      frame(pdf.iloc[[i]]))
 
 
 def test_spatial_features_match_numpy_and_detect_blur(spark):
